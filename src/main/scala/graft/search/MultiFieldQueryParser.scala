@@ -124,17 +124,17 @@ object MultiFieldQueryParser {
       // hand-built PhraseQ nodes that never had a raw form.
       Some(TermQ(s"$f:${raw.getOrElse(terms.mkString(" "))}", b))
     case BoolQ(must, should, mustNot, msm, b) =>
-      // A MUST clause the keyword field can't express must fail the
-      // WHOLE per-field interpretation: dropping it would broaden the
-      // field's branch past the original semantics.
+      // A MUST or MUST_NOT clause the keyword field can't express must
+      // fail the WHOLE per-field interpretation: dropping it would
+      // broaden the field's branch past the original semantics.
       val m = must.map(prefixField(_, f))
-      if (m.exists(_.isEmpty)) None
+      val n = mustNot.map(prefixField(_, f))
+      if (m.exists(_.isEmpty) || n.exists(_.isEmpty)) None
       else {
         val s = should.flatMap(prefixField(_, f))
-        val n = mustNot.flatMap(prefixField(_, f))
-        val mm = m.flatten
-        if (mm.isEmpty && s.isEmpty && n.isEmpty) None
-        else Some(BoolQ(mm, s, n, msm, b))
+        val (mm, nn) = (m.flatten, n.flatten)
+        if (mm.isEmpty && s.isEmpty && nn.isEmpty) None
+        else Some(BoolQ(mm, s, nn, msm, b))
       }
     case ConstantScoreQ(sub, b) => prefixField(sub, f).map(ConstantScoreQ(_, b))
     case DisMaxQ(qs, tb) =>

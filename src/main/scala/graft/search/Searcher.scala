@@ -309,17 +309,38 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
 
 private final case class ClauseHit(docId: Long, idx: Int, score: Float)
 
+/** One query's scoring inputs: the similarity, the dictionary stats of
+  * every term in the rewritten tree, and one weight vector per scoring
+  * leaf, keyed by the leaf's (terms, boost) — a weight depends only on
+  * those and on query-wide couplings, so equal leaves share one entry. */
+private final case class QueryWeights(sim: SimilarityLike,
+    stats: Map[String, TermDictRow],
+    byClause: Map[(Seq[String], Float), Array[Float]]) {
+  def apply(terms: Seq[String], boost: Float): Array[Float] = byClause((terms, boost))
+}
+
 object Searcher {
   /** FuzzyQuery's TOP_TERMS budget (reference: FuzzyQuery
     * defaultMaxExpansions = 50). */
   val FuzzyMaxExpansions = 50
+
+  /** Block bound of one postings row summed over the clause entries that
+    * share its term. */
+  private def entriesBound(sim: SimilarityLike, maxTf: Int, maxNorm: Int,
+                           entries: Array[(Array[Float], Int)]): Float = {
+    var ub = 0f
+    entries.foreach(e => ub += sim.blockBound(maxTf, maxNorm.toByte, e._1))
+    ub
+  }
 }
 
-/** BM25 top-k search over the index tables (≙ IndexSearcher, reference:
-  * Search/IndexSearcher.cs:282-500, restated in SURVEY.md §3.2).
+/** Top-k search over the index tables (≙ IndexSearcher, reference:
+  * Search/IndexSearcher.cs:282-500, restated in SURVEY.md §3.2), under
+  * BM25 unless the caller passes another [[SimilarityLike]].
   *
   * Physical shape per query:
-  *   - dictionary stats lookup (tiny job) → weights computed driver-side;
+  *   - one dictionary stats lookup (tiny job) → weights computed
+  *     driver-side by the similarity;
   *   - postings scan filtered to the query terms (parquet min/max pruning
   *     on the sorted term column), block decode behind block-max WAND
   *     pruning (public literature: Broder et al.; Ding & Suel BMW — the
@@ -330,8 +351,9 @@ object Searcher {
   *     Aggregator (map-side partial heaps + one merge ≙ TopDocs.Merge).
   *
   * Float determinism: clause scores are summed in clause-declaration order
-  * per doc (the reference's in-order sum, DisjunctionSumScorer.cs:59-85);
-  * coord = queryNorm = 1 under BM25 (Similarity.cs:122-143).
+  * per doc (the reference's in-order sum, DisjunctionSumScorer.cs:59-85),
+  * then multiplied by the similarity's coord — 1 under BM25
+  * (Similarity.cs:122-143), so BM25 sums stay exact.
   */
 final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     analyzerFor: String => graft.analysis.Analyzer = graft.analysis.Analyzer.forLang,
@@ -343,6 +365,10 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   private lazy val cs = reader.collectionStats
   private lazy val cache: Array[Float] =
     BM25.normCache(BM25.avgFieldLength(cs.sumTotalTermFreq, cs.maxDoc))
+
+  /** The default engine similarity: BM25 over this index's stats. */
+  lazy val defaultSimilarity: SimilarityLike =
+    new BM25Similarity(BM25.avgFieldLength(cs.sumTotalTermFreq, cs.maxDoc))
 
   /** liveDocs analog: tombstoned docIds are filtered out of every result
     * (stats intentionally unchanged until Deletes.expunge, like the
@@ -514,23 +540,71 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   // ------------------------------------------------------------- scoring
 
-  /** Full scored Dataset for a query — the composable scorer tree. Exact
-    * scores, no pruning (also the brute-force oracle path for tests). */
-  def scored(q: Query): Dataset[ScoreDoc] = liveOnly(scoredRaw(rewrite(q)))
+  /** Full scored Dataset for a query under `sim` — the composable scorer
+    * tree. Exact scores, no pruning (also the brute-force oracle path for
+    * tests). */
+  def scored(q: Query, sim: SimilarityLike = defaultSimilarity): Dataset[ScoreDoc] = {
+    val rq = rewrite(q)
+    liveOnly(scoredRaw(rq, weigh(rq, sim)))
+  }
+
+  /** The scoring leaves of a rewritten tree as (terms, boost) clauses in
+    * tree order, MUST before SHOULD — the order TF-IDF's queryNorm sums
+    * in. A phrase carries its terms in query order (duplicates too), a
+    * multi-phrase every alternative of every slot (the idf sums the BM25
+    * phrase weights take, BM25Similarity.cs:210-225). */
+  private def leafClauses(q: Query): Seq[(Seq[String], Float)] = q match {
+    case TermQ(t, b) => Seq((Seq(t), b))
+    case PhraseQ(ts, _, b, _) => Seq((ts, b))
+    case SparsePhraseQ(parts, b) => Seq((parts.map(_._1), b))
+    case MultiPhraseQ(slots, _, b) => Seq((slots.flatten, b))
+    case BoolQ(m, s, n, _, _) => (m ++ s ++ n).flatMap(leafClauses)
+    case ConstantScoreQ(sub, _) => leafClauses(sub)
+    case DisMaxQ(qs, _) => qs.flatMap(leafClauses)
+    case FunctionScoreQ(sub, _) => leafClauses(sub)
+    case BoostingQ(pos, ctx, _) => leafClauses(pos) ++ leafClauses(ctx)
+    case _ => Nil
+  }
+
+  /** A term, a phrase, or a flat MUST/SHOULD boolean of them with
+    * minShouldMatch ≤ 1 (see [[SimilarityLike.clauseIndependent]]). */
+  private def flatShape(q: Query): Boolean = {
+    def leaf(c: Query): Boolean = c.isInstanceOf[TermQ] || c.isInstanceOf[PhraseQ]
+    q match {
+      case BoolQ(m, s, Nil, msm, _) => msm <= 1 && (m ++ s).forall(leaf)
+      case other => leaf(other)
+    }
+  }
+
+  /** Weighs a rewritten tree once (≙ IndexSearcher.CreateNormalizedWeight,
+    * IndexSearcher.cs:720-732): one dictionary lookup for every term in
+    * the tree and one `sim.clauseWeights` call over all its leaves, so a
+    * coupling across clauses (TF-IDF's queryNorm) sees every clause. */
+  private def weigh(rq: Query, sim: SimilarityLike): QueryWeights = {
+    if (!sim.clauseIndependent && !flatShape(rq))
+      throw new UnsupportedOperationException(
+        s"this similarity scores a term, a phrase, or a flat boolean of them, got $rq")
+    val clauses = leafClauses(rq)
+    val stats = reader.termStats(clauses.flatMap(_._1).distinct)
+    val ws = sim.clauseWeights(clauses, stats, cs.maxDoc, cs.sumTotalTermFreq)
+    QueryWeights(sim, stats, clauses.zip(ws).toMap)
+  }
 
   /** Scores an ALREADY-REWRITTEN tree — every entry point calls
     * [[rewrite]] exactly once, so the dictionary probes a multi-term
     * rewrite needs are never repeated (the reference caches its rewrite
-    * the same way, IndexSearcher.cs:667-670). */
-  private def scoredRaw(q: Query): Dataset[ScoreDoc] = q match {
+    * the same way, IndexSearcher.cs:667-670). `theta` is the block-max
+    * WAND threshold of a top-level term or disjunction of terms. */
+  private def scoredRaw(q: Query, qw: QueryWeights,
+                        theta: Float = 0f): Dataset[ScoreDoc] = q match {
     case TermQ(t, boost) =>
-      scoredTerms(Seq(t -> boost), theta = 0f).map(h => ScoreDoc(h.docId, h.score))
+      scoredTermsIndexed(Seq((t, boost, 0)), qw, theta).map(h => ScoreDoc(h.docId, h.score))
     case MatchAllQ(boost) =>
       reader.docstats.select($"docId").as[Long].map(ScoreDoc(_, boost))
     case ConstantScoreQ(sub, boost) =>
-      scoredRaw(sub).map(sd => ScoreDoc(sd.docId, boost))
+      scoredRaw(sub, qw).map(sd => ScoreDoc(sd.docId, boost))
     case dm @ DisMaxQ(qs, tieBreak) =>
-      val hits = unionClauses(qs)
+      val hits = unionClauses(qs, qw)
       hits.groupByKey(_.docId).mapGroups { (docId, it) =>
         // the reference sums sub-scorer scores in clause order
         // (DisjunctionMaxScorer.cs) — buffer and sort by clause idx so the
@@ -549,7 +623,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       // lossy norm byte; evaluated per hit inside the join, no driver hop.
       val dl = reader.docstats
         .select($"docId", $"tokenCount".cast("float").as("dl")).as[(Long, Float)]
-      val subScores = scoredRaw(subQ)
+      val subScores = scoredRaw(subQ, qw)
       subScores.joinWith(dl, subScores("docId") === dl("docId"))
         .map { case (sd, (_, len)) =>
           ScoreDoc(sd.docId, ScoreExpr.eval(expr, sd.score, len)) }
@@ -558,16 +632,16 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       // score by contextBoost; context alone never matches — a left outer
       // join against the context's docId set (tuple-typed so an unmatched
       // row decodes as a null tuple, not a primitive default)
-      val posScores = scoredRaw(pos)
-      val ctxDocs = scoredRaw(ctx).map(_.docId).distinct().map(id => (id, true))
+      val posScores = scoredRaw(pos, qw)
+      val ctxDocs = scoredRaw(ctx, qw).map(_.docId).distinct().map(id => (id, true))
       posScores.joinWith(ctxDocs, posScores("docId") === ctxDocs("_1"), "left_outer")
         .map { case (sd, matched) =>
           if (matched == null) sd else ScoreDoc(sd.docId, sd.score * b)
         }
-    case bq: BoolQ => scoredBool(bq)
-    case PhraseQ(terms, slop, boost, _) => scoredPhrase(terms, slop, boost)
-    case SparsePhraseQ(parts, boost) => scoredSparsePhrase(parts, boost)
-    case MultiPhraseQ(slots, slop, boost) => scoredMultiPhrase(slots, slop, boost)
+    case bq: BoolQ => scoredBool(bq, qw, theta)
+    case PhraseQ(terms, slop, boost, _) => scoredPhrase(terms, slop, boost, qw)
+    case SparsePhraseQ(parts, boost) => scoredSparsePhrase(parts, boost, qw)
+    case MultiPhraseQ(slots, slop, boost) => scoredMultiPhrase(slots, slop, boost, qw)
     case mt if multiTermPred(mt).isDefined =>
       // CONSTANT_SCORE_AUTO fallback: a wide multi-term query (dictionary
       // match past the clause budget) scores constant over the docs of
@@ -602,50 +676,47 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * column on every posting.
     *
     * Scoring matches the reference's ExactPhraseScorer: phraseFreq plays
-    * tf in BM25, weight = Σ idf over phrase terms (BM25Similarity.cs:
-    * 210-225), same norm byte as term scoring. Single-term phrases
+    * tf, the clause weight covers every phrase term (under BM25 Σ idf,
+    * BM25Similarity.cs:210-225), same norm byte as term scoring. Single-term phrases
     * rewrite to TermQuery (PhraseQuery.cs:175). slop > 0 runs the
     * reference-exact SloppyPhraseScorer traversal ([[SloppyPhrase]]):
     * out-of-order matches within slop, slop-factor-weighted float freq,
     * repeat-group collision handling. */
-  private def scoredPhrase(terms: Seq[String], slop: Int, boost: Float): Dataset[ScoreDoc] = {
+  private def scoredPhrase(terms: Seq[String], slop: Int, boost: Float,
+                           qw: QueryWeights): Dataset[ScoreDoc] = {
     require(terms.nonEmpty, "empty phrase")
-    if (terms.size == 1) return scoredRaw(TermQ(terms.head, boost))
-    val stats = reader.termStats(terms.distinct)
-    if (!terms.forall(stats.contains)) return spark.emptyDataset[ScoreDoc]
-    // idf sum over phrase terms in query order, duplicates included
-    val weight = BM25.weightValue(
-      terms.map(t => BM25.idf(stats(t).df, cs.maxDoc)).sum, boost)
-    val localCache = cache
+    if (terms.size == 1) return scoredRaw(TermQ(terms.head, boost), qw)
+    if (!terms.forall(qw.stats.contains)) return spark.emptyDataset[ScoreDoc]
+    val sim = qw.sim
+    val wv = qw(terms, boost)
     val freqs: Dataset[(Long, Float, Int)] =
       if (reader.hasPositions) phraseFreqsFromIndex(terms, slop)
       else if (slop == 0)
         phraseFreqs(terms).map(t => (t._1, t._2.toFloat, t._3))
       else sloppyPhraseFreqs(terms, slop)
     freqs.map { case (docId, freq, norm) =>
-      ScoreDoc(docId, BM25.score(freq, norm.toByte, weight, localCache))
+      ScoreDoc(docId, sim.score(freq, norm.toByte, wv))
     }
   }
 
   /** Exact phrase at EXPLICIT positions (PhraseQuery.Add(term, position)
     * / the NGramPhraseQuery rewrite target): anchor = a match of the
     * first part; every later part must sit exactly at anchor + its
-    * relative position. Same BM25 framing as the dense exact phrase
-    * (weight = Σ idf over the parts actually queried — the reference's
+    * relative position. Same framing as the dense exact phrase
+    * (the weight covers the parts actually queried — the reference's
     * optimized PhraseQuery carries only the kept terms, so its weight
     * drops the skipped grams' idf the same way). Positions index
     * required — the positionless re-analysis fallback can't see gaps. */
-  private def scoredSparsePhrase(parts: Seq[(String, Int)], boost: Float): Dataset[ScoreDoc] = {
+  private def scoredSparsePhrase(parts: Seq[(String, Int)], boost: Float,
+                                 qw: QueryWeights): Dataset[ScoreDoc] = {
     require(parts.nonEmpty, "empty sparse phrase")
-    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost))
+    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost), qw)
     require(reader.hasPositions, "SparsePhraseQ requires a positions-enabled index")
-    val stats = reader.termStats(parts.map(_._1).distinct)
-    if (!parts.forall(p => stats.contains(p._1))) return spark.emptyDataset[ScoreDoc]
-    val weight = BM25.weightValue(
-      parts.map(p => BM25.idf(stats(p._1).df, cs.maxDoc)).sum, boost)
-    val localCache = cache
+    if (!parts.forall(p => qw.stats.contains(p._1))) return spark.emptyDataset[ScoreDoc]
+    val sim = qw.sim
+    val wv = qw(parts.map(_._1), boost)
     sparsePhraseFreqs(parts).map { case (docId, freq, norm) =>
-      ScoreDoc(docId, BM25.score(freq, norm.toByte, weight, localCache))
+      ScoreDoc(docId, sim.score(freq, norm.toByte, wv))
     }
   }
 
@@ -684,11 +755,11 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * norm) rows, one docId shuffle, then the same exact/sloppy matching
     * the re-analysis path runs (bit-identical freqs — PositionsSpec).
     * This is the plan for the re-analysis worst case: phrases of very
-    * common terms whose candidate set after conjunction is large. */
+    * common terms whose candidate set after conjunction is large. A term
+    * missing from the index has no rows, so every group fails the
+    * conjunction — no dictionary pre-check needed. */
   def phraseFreqsFromIndex(terms: Seq[String], slop: Int): Dataset[(Long, Float, Int)] = {
     val distinct = terms.distinct
-    val stats = reader.termStats(distinct)
-    if (!distinct.forall(stats.contains)) return spark.emptyDataset[(Long, Float, Int)]
     val phraseArr = terms.toIndexedSeq
     val nDistinct = distinct.length
     val rows = termPositionRows(distinct)
@@ -921,31 +992,25 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   }
 
   /** Scored MultiPhraseQuery (reference: MultiPhraseQuery.cs
-    * MultiPhraseWeight): phrase freq plays tf; the weight's idf is the
-    * sum over EVERY term in every slot, unindexed alternatives included
-    * with df = 0 (the reference's TermContext behavior); the norm byte
-    * joins in from docstats (the multi-phrase freq paths don't carry
-    * it). */
+    * MultiPhraseWeight): phrase freq plays tf; the weight covers EVERY
+    * term in every slot, unindexed alternatives included with df = 0
+    * (the reference's TermContext behavior); the norm byte joins in from
+    * docstats (the multi-phrase freq paths don't carry it). */
   private def scoredMultiPhrase(slots: Seq[Seq[String]], slop: Int,
-                                boost: Float): Dataset[ScoreDoc] = {
+                                boost: Float, qw: QueryWeights): Dataset[ScoreDoc] = {
     require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
-    val flat = slots.flatten
-    val stats = reader.termStats(flat.distinct)
+    val stats = qw.stats
     val liveSlots = slots.map(_.filter(stats.contains))
     if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[ScoreDoc]
-    val weight = BM25.weightValue(
-      flat.map(t => BM25.idf(stats.get(t).map(_.df).getOrElse(0L), cs.maxDoc)).sum,
-      boost)
     val freqs: Dataset[(Long, Float)] =
       if (slop == 0) multiPhraseFreqsWith(liveSlots, stats).map(t => (t._1, t._2.toFloat))
       else multiPhraseFreqsSloppyWith(liveSlots, slop, stats)
-    val localCache = cache
+    val sim = qw.sim
+    val wv = qw(slots.flatten, boost)
     freqs.toDF("docId", "freq")
       .join(reader.docstats.select($"docId", $"norm"), Seq("docId"))
       .as[(Long, Float, Int)]
-      .map { case (docId, freq, norm) =>
-        ScoreDoc(docId, BM25.score(freq, norm.toByte, weight, localCache))
-      }
+      .map { case (docId, freq, norm) => ScoreDoc(docId, sim.score(freq, norm.toByte, wv)) }
   }
 
   /** MultiPhraseQuery analog (reference: Search/MultiPhraseQuery.cs):
@@ -1392,133 +1457,6 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
         $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
       .flatMap(r => PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)._1)
 
-  // ------------------------------------------- pluggable-similarity path
-
-  /** The default engine similarity: BM25 over this index's stats. */
-  lazy val defaultSimilarity: SimilarityLike =
-    new BM25Similarity(BM25.avgFieldLength(cs.sumTotalTermFreq, cs.maxDoc))
-
-  /** Top-k under a caller-chosen similarity: BM25 keeps the specialized
-    * WAND path (proven bit-equal to the generic path in SimilaritySpec);
-    * every other family rides [[searchWith]]. */
-  def search(q: Query, k: Int, sim: SimilarityLike): Array[ScoreDoc] =
-    searchAfter(null, q, k, sim)
-
-  def searchAfter(after: ScoreDoc, q: Query, k: Int, sim: SimilarityLike): Array[ScoreDoc] =
-    sim match {
-      case _: BM25Similarity => searchAfter(after, q, k)
-      case s => searchAfterWith(s, after, q, k)
-    }
-
-  /** Generic top-k under any [[SimilarityLike]] — term, phrase (exact and
-    * sloppy) and flat boolean queries: the reference's
-    * CreateNormalizedWeight pipeline — weights from ALL clauses jointly
-    * (queryNorm coupling), per-hit scores, clause-order sum × coord. The
-    * BM25-specialized WAND path remains [[search]]; this path trades
-    * pruning for total generality. */
-  def searchWith(sim: SimilarityLike, q: Query, k: Int): Array[ScoreDoc] =
-    searchAfterWith(sim, null, q, k)
-
-  def searchAfterWith(sim: SimilarityLike, after: ScoreDoc, q: Query,
-                      k: Int): Array[ScoreDoc] = {
-    val live = liveOnly(scoredWith(sim, q))
-    val filtered = if (after == null) live else {
-      val aScore = after.score
-      val aDoc = after.docId
-      live.filter(sd => sd.score < aScore || (sd.score == aScore && sd.docId > aDoc))
-    }
-    filtered.select(new TopKAggregator(k).toColumn).head()
-  }
-
-  /** One scoring clause of the generic path: a term (`terms.size == 1`,
-    * `phrase = false`) or a phrase with slop. */
-  private case class SimClause(terms: Seq[String], slop: Int, boost: Float,
-                               phrase: Boolean)
-
-  private def toSimClause(q: Query): SimClause = q match {
-    case TermQ(t, b) => SimClause(Seq(t), 0, b, phrase = false)
-    case PhraseQ(Seq(t), _, b, _) => SimClause(Seq(t), 0, b, phrase = false)
-    case PhraseQ(ts, slop, b, _) => SimClause(ts, slop, b, phrase = true)
-    case other => throw new UnsupportedOperationException(
-      s"searchWith clause must be a term or phrase, got $other")
-  }
-
-  /** Full scored Dataset under an arbitrary similarity. */
-  def scoredWith(sim: SimilarityLike, q: Query): Dataset[ScoreDoc] = {
-    val (mustC, shouldC, boost) = rewrite(q) match {
-      case BoolQ(m, s, Nil, msm, b) if msm <= 1 =>
-        (m.map(toSimClause), s.map(toSimClause), b)
-      case leaf => (Nil, Seq(toSimClause(leaf)), 1f)
-    }
-    val clauses = (mustC ++ shouldC).toIndexedSeq
-    if (clauses.isEmpty) return spark.emptyDataset[ScoreDoc]
-    val stats = reader.termStats(clauses.flatMap(_.terms).distinct)
-    val wts = sim.clauseWeights(clauses.map(c => (c.terms, c.boost)),
-      stats, cs.maxDoc, cs.sumTotalTermFreq).toArray
-    val nMust = mustC.length
-    val total = clauses.length
-    def liveClause(c: SimClause): Boolean = c.terms.forall(stats.contains)
-    // a MUST clause on an unindexed term can never be satisfied
-    if (mustC.exists(c => !liveClause(c))) return spark.emptyDataset[ScoreDoc]
-
-    // every clause scores independently (reference: one Weight per
-    // BooleanClause) — term clauses batch into ONE postings scan, a term
-    // shared by several clauses fans each decoded posting out to every
-    // clause index, so duplicates keep their own boost, slot in
-    // present[], and coord contribution
-    val liveByTerm: Map[String, Array[(Int, Array[Float])]] = clauses.zipWithIndex
-      .collect { case (c, i) if !c.phrase && liveClause(c) => (c.terms.head, i) }
-      .groupBy(_._1)
-      .map { case (t, xs) => t -> xs.map(x => (x._2, wts(x._2))).toArray }
-    val bSim = sim
-    val termHits: Seq[Dataset[ClauseHit]] =
-      if (liveByTerm.isEmpty) Nil
-      else Seq(reader.postings.where($"term".isin(liveByTerm.keys.toSeq: _*))
-        .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-          $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
-        .flatMap { r =>
-          val entries = liveByTerm(r.term)
-          val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-          ids.indices.iterator.flatMap(i => entries.iterator.map { case (ci, w) =>
-            ClauseHit(ids(i), ci, bSim.score(tfs(i).toFloat, norms(i).toByte, w))
-          })
-        })
-    // phrase clauses: phraseFreq plugs in where tf does (reference:
-    // PhraseWeight → SimScorer.Score(doc, phraseFreq))
-    val phraseHits: Seq[Dataset[ClauseHit]] = clauses.zipWithIndex.collect {
-      case (c, ci) if c.phrase && liveClause(c) =>
-        val w = wts(ci)
-        val freqs: Dataset[(Long, Float, Int)] =
-          if (c.slop == 0) phraseFreqs(c.terms).map(t => (t._1, t._2.toFloat, t._3))
-          else sloppyPhraseFreqs(c.terms, c.slop)
-        freqs.map { case (docId, f, norm) =>
-          ClauseHit(docId, ci, bSim.score(f, norm.toByte, w))
-        }
-    }
-    val all = termHits ++ phraseHits
-    if (all.isEmpty) return spark.emptyDataset[ScoreDoc]
-    val hits = all.reduce(_ union _)
-    hits.groupByKey(_.docId).flatMapGroups { (docId, it) =>
-      val scores = new Array[Float](total)
-      val present = new Array[Boolean](total)
-      it.foreach { h => scores(h.idx) = h.score; present(h.idx) = true }
-      var mustOk = true
-      var i = 0
-      while (i < nMust) { if (!present(i)) mustOk = false; i += 1 }
-      if (!mustOk) Iterator.empty
-      else {
-        var sum = 0f
-        var matched = 0
-        i = 0
-        while (i < total) {
-          if (present(i)) { sum += scores(i); matched += 1 }
-          i += 1
-        }
-        Iterator.single(ScoreDoc(docId, sum * bSim.coord(matched, total) * boost))
-      }
-    }
-  }
-
   // ------------------------------------------------------ explain support
 
   private[search] def readerTermStats(ts: Seq[String]) = reader.termStats(ts)
@@ -1549,33 +1487,34 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     }.nextOption()
   }
 
-  private def unionClauses(qs: Seq[Query]): Dataset[ClauseHit] = {
+  private def unionClauses(qs: Seq[Query], qw: QueryWeights,
+                           theta: Float = 0f): Dataset[ClauseHit] = {
     // batch TermQ leaves into ONE postings scan; recurse for the rest
     val indexed = qs.zipWithIndex
     val termLeaves = indexed.collect { case (TermQ(t, b), i) => (t, b, i) }
     val complex = indexed.filterNot(_._1.isInstanceOf[TermQ])
     val parts =
-      (if (termLeaves.nonEmpty)
-        Seq(scoredTermsIndexed(termLeaves.map(t => (t._1, t._2, t._3))))
+      (if (termLeaves.nonEmpty) Seq(scoredTermsIndexed(termLeaves, qw, theta))
       else Nil) ++
       complex.map { case (q, i) =>
-        scoredRaw(q).map(sd => ClauseHit(sd.docId, i, sd.score))
+        scoredRaw(q, qw).map(sd => ClauseHit(sd.docId, i, sd.score))
       }
     if (parts.isEmpty) spark.emptyDataset[ClauseHit]
     else parts.reduce(_ union _)
   }
 
   /** Boolean composition: one shuffle by docId; musts enforced by presence
-    * bitmask, minShouldMatch by count, score = in-clause-order float sum
-    * (BooleanScorer2 semantics under BM25). */
-  private def scoredBool(q: BoolQ): Dataset[ScoreDoc] = {
+    * bitmask, minShouldMatch by count, score = in-clause-order float sum ×
+    * coord (BooleanScorer2 semantics). */
+  private def scoredBool(q: BoolQ, qw: QueryWeights, theta: Float): Dataset[ScoreDoc] = {
     val scoring = q.must ++ q.should
     if (scoring.isEmpty) return spark.emptyDataset[ScoreDoc]
     val nMust = q.must.size
     val n = scoring.size
     val msm = math.max(q.minShouldMatch, if (nMust == 0) 1 else 0)
     val boost = q.boost
-    val hits = unionClauses(scoring)
+    val sim = qw.sim
+    val hits = unionClauses(scoring, qw, theta)
     val combined = hits.groupByKey(_.docId).flatMapGroups { (docId, it) =>
       val scores = new Array[Float](n)
       val present = new Array[Boolean](n)
@@ -1588,14 +1527,15 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       while (i < n) { if (present(i)) shouldCount += 1; i += 1 }
       if (mustOk && shouldCount >= msm) {
         var sum = 0f // fixed clause order — float-exact vs the reference
+        var matched = 0
         i = 0
-        while (i < n) { if (present(i)) sum += scores(i); i += 1 }
-        Iterator.single(ScoreDoc(docId, sum * boost))
+        while (i < n) { if (present(i)) { sum += scores(i); matched += 1 }; i += 1 }
+        Iterator.single(ScoreDoc(docId, sum * sim.coord(matched, n) * boost))
       } else Iterator.empty
     }
     if (q.mustNot.isEmpty) combined
     else {
-      val excluded = q.mustNot.map(mq => scoredRaw(mq).map(_.docId))
+      val excluded = q.mustNot.map(mq => scoredRaw(mq, qw).map(_.docId))
         .reduce(_ union _).distinct().toDF("docId_ex")
       // ReqExclScorer ≙ anti-join (reference: ReqExclScorer.cs)
       combined.join(excluded, combined("docId") === excluded("docId_ex"), "left_anti")
@@ -1605,48 +1545,44 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   // ---------------------------------------------------- term-leaf scanning
 
-  /** Score a batch of terms in one postings scan. `theta` is the block-max
-    * WAND threshold: blocks whose own upper bound plus every OTHER term's
-    * whole-list upper bound stays below theta cannot contain a top-k doc
-    * and are skipped before decoding. */
-  private def scoredTerms(terms: Seq[(String, Float)], theta: Float): Dataset[ClauseHit] =
-    scoredTermsIndexed(terms.zipWithIndex.map { case ((t, b), i) => (t, b, i) }, theta)
-
-  private def scoredTermsIndexed(terms: Seq[(String, Float, Int)],
+  /** Score a batch of (term, boost, clauseIdx) leaves in one postings
+    * scan. `theta` is the block-max WAND threshold: blocks whose own upper
+    * bound plus every OTHER term's whole-list upper bound stays below
+    * theta cannot contain a top-k doc and are skipped before decoding. */
+  private def scoredTermsIndexed(terms: Seq[(String, Float, Int)], qw: QueryWeights,
                                  theta: Float = 0f): Dataset[ClauseHit] = {
-    if (terms.isEmpty) return spark.emptyDataset[ClauseHit]
-    val stats = reader.termStats(terms.map(_._1))
-    val live = terms.filter(t => stats.contains(t._1)) // df=0 → no hits, no NaN
+    val live = terms.filter(t => qw.stats.contains(t._1)) // df=0 → no hits, no NaN
     if (live.isEmpty) return spark.emptyDataset[ClauseHit]
-    // per-term ARRAY of (weightValue, clauseIdx): a term shared by several
+    // per-term ARRAY of (weight, clauseIdx): a term shared by several
     // clauses fans each decoded posting out to every clause entry, so
-    // duplicates keep their own boost and slot (same rule as scoredBool's
-    // liveByTerm — one Weight per BooleanClause in the reference)
-    val weights: Map[String, Array[(Float, Int)]] =
+    // duplicates keep their own boost and slot (one Weight per
+    // BooleanClause in the reference)
+    val weights: Map[String, Array[(Array[Float], Int)]] =
       live.groupBy(_._1).map { case (t, xs) =>
-        t -> xs.map { case (_, b, i) =>
-          (BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), b), i)
-        }.toArray
+        t -> xs.map { case (_, b, i) => (qw(Seq(t), b), i) }.toArray
       }
-    val termUB: Map[String, Float] = weights.map { case (t, entries) =>
-      val s = stats(t)
-      // duplicate clauses each contribute; the union's UB for this term
-      // is the sum over its clause entries
-      t -> entries.map(e => BM25.blockMaxScore(s.maxTf, cache(s.maxNorm & 0xff), e._1)).sum
-    }
-    val sumUB = termUB.values.sum
-    val localCache = cache
+    val sim = qw.sim
+    // every OTHER term's whole-list bound (dictionary maxTf/maxNorm);
+    // duplicate clauses each contribute to their term's bound
+    val othersUB: Map[String, Float] =
+      if (theta <= 0f) Map.empty
+      else {
+        val termUB = weights.map { case (t, entries) =>
+          val s = qw.stats(t)
+          t -> Searcher.entriesBound(sim, s.maxTf, s.maxNorm, entries)
+        }
+        val sumUB = termUB.values.sum
+        termUB.map { case (t, ub) => t -> (sumUB - ub) }
+      }
     val rows = reader.postings.where($"term".isin(live.map(_._1).distinct: _*))
       .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
         $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
     rows.mapPartitions { it =>
       it.flatMap { r =>
         val entries = weights(r.term)
-        var blockUB = 0f
-        entries.foreach(e =>
-          blockUB += BM25.blockMaxScore(r.maxTf, localCache(r.maxNorm & 0xff), e._1))
-        val othersUB = sumUB - termUB(r.term)
-        if (theta > 0f && blockUB + othersUB < theta) Iterator.empty
+        if (theta > 0f &&
+            Searcher.entriesBound(sim, r.maxTf, r.maxNorm, entries) + othersUB(r.term) < theta)
+          Iterator.empty
         else {
           val (docIds, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
           val out = new Array[ClauseHit](docIds.length * entries.length)
@@ -1655,9 +1591,8 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
           while (i < docIds.length) {
             var e = 0
             while (e < entries.length) {
-              val (w, idx) = entries(e)
-              out(o) = ClauseHit(docIds(i),
-                idx, BM25.score(tfs(i).toFloat, norms(i).toByte, w, localCache))
+              val (wv, idx) = entries(e)
+              out(o) = ClauseHit(docIds(i), idx, sim.score(tfs(i).toFloat, norms(i).toByte, wv))
               o += 1
               e += 1
             }
@@ -1687,32 +1622,27 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     graft.build.Deletes.deleteDocs(spark, reader.dir, ids)
   }
 
-  /** Top-k search: score desc, docId asc (≙ IndexSearcher.Search(q, n)). */
-  def search(q: Query, k: Int): Array[ScoreDoc] = searchAfter(null, q, k)
+  /** Top-k search under `sim`: score desc, docId asc
+    * (≙ IndexSearcher.Search(q, n)). */
+  def search(q: Query, k: Int, sim: SimilarityLike = defaultSimilarity): Array[ScoreDoc] =
+    searchAfter(null, q, k, sim)
 
   /** Pagination (≙ IndexSearcher.SearchAfter, reference:
     * Search/IndexSearcher.cs:255-273): only hits strictly after `after` in
     * (score desc, docId asc) order compete. */
-  def searchAfter(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = {
+  def searchAfter(after: ScoreDoc, q: Query, k: Int,
+                  sim: SimilarityLike = defaultSimilarity): Array[ScoreDoc] = {
     val rq = rewrite(q)
-    val base: Dataset[ScoreDoc] = rq match {
-      // WAND fast path: single term / pure disjunction of terms, msm<=1
-      case TermQ(t, b) =>
-        scoredTerms(Seq(t -> b), theta = bootstrapTheta(Seq(t -> b), k, after))
-          .map(h => ScoreDoc(h.docId, h.score))
+    val qw = weigh(rq, sim)
+    val theta = rq match {
+      // block-max WAND: single term / pure disjunction of terms, msm<=1
+      case TermQ(t, b) => bootstrapTheta(Seq(t -> b), k, after, qw)
       case BoolQ(Nil, should, Nil, msm, boost)
           if msm <= 1 && boost == 1f && should.forall(_.isInstanceOf[TermQ]) =>
-        val ts = should.map { case TermQ(t, b) => (t, b) }
-        val theta = bootstrapTheta(ts, k, after)
-        scoredTerms(ts, theta).groupByKey(_.docId).mapGroups { (docId, it) =>
-          val buf = it.toArray.sortBy(_.idx)
-          var sum = 0f
-          buf.foreach(h => sum += h.score)
-          ScoreDoc(docId, sum)
-        }
-      case other => scoredRaw(other)
+        bootstrapTheta(should.collect { case TermQ(t, b) => (t, b) }, k, after, qw)
+      case _ => 0f
     }
-    val live = liveOnly(base)
+    val live = liveOnly(scoredRaw(rq, qw, theta))
     val filtered = if (after == null) live else {
       val aScore = after.score
       val aDoc = after.docId
@@ -1726,33 +1656,32 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * of the highest-upper-bound term; its hits' single-term scores are
     * lower bounds of their true scores, so the kth best is a sound
     * threshold. Returns 0 (no pruning) when the index is too small to
-    * bother. */
+    * bother or the similarity bounds no block. */
   private def bootstrapTheta(terms: Seq[(String, Float)], k: Int,
-                             after: ScoreDoc): Float = {
+                             after: ScoreDoc, qw: QueryWeights): Float = {
     if (after != null) return 0f // pagination: correctness over speed
-    val stats = reader.termStats(terms.map(_._1))
-    val live = terms.filter(t => stats.contains(t._1))
+    val live = terms.filter(t => qw.stats.contains(t._1))
     if (live.isEmpty) return 0f
-    val totalBlocks = live.map(t => (stats(t._1).df / PostingsCodec.BlockSize) + 1).sum
+    val totalBlocks = live.map(t => (qw.stats(t._1).df / PostingsCodec.BlockSize) + 1).sum
     if (totalBlocks < pruneMinBlocks) return 0f // pruning overhead not worth it
-    val best = live.maxBy { case (t, b) =>
-      val s = stats(t)
-      BM25.blockMaxScore(s.maxTf, cache(s.maxNorm & 0xff),
-        BM25.weightValue(BM25.idf(s.df, cs.maxDoc), b))
+    val sim = qw.sim
+    def termBound(tb: (String, Float)): Float = {
+      val s = qw.stats(tb._1)
+      sim.blockBound(s.maxTf, s.maxNorm.toByte, qw(Seq(tb._1), tb._2))
     }
-    val (t, b) = best
-    val w = BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), b)
-    val localCache = cache
+    val (t, b) = live.maxBy(termBound)
+    if (termBound((t, b)).isInfinite) return 0f // no bound: nothing to prune
+    val wv = qw(Seq(t), b)
     val bestBlock = reader.postings.where($"term" === t)
       .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
         $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
-      .map(r => (BM25.blockMaxScore(r.maxTf, localCache(r.maxNorm & 0xff), w), r))
+      .map(r => (sim.blockBound(r.maxTf, r.maxNorm.toByte, wv), r))
       .orderBy($"_1".desc).limit(1).collect()
     if (bestBlock.isEmpty) return 0f
     val r = bestBlock(0)._2
     val (_, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
     val scores = Array.tabulate(tfs.length)(i =>
-      BM25.score(tfs(i).toFloat, norms(i).toByte, w, localCache))
+      sim.score(tfs(i).toFloat, norms(i).toByte, wv))
     if (scores.length < k) 0f
     else {
       java.util.Arrays.sort(scores)

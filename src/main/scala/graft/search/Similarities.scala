@@ -6,27 +6,31 @@ import graft.build.TermDictRow
 /** Pluggable per-query scoring contract (reference:
   * Search/Similarities/Similarity.cs — a Similarity turns collection +
   * term statistics into per-clause weights, then per-(doc,clause) scores,
-  * plus the boolean combination factors coord and queryNorm).
+  * plus the boolean combination factor coord).
   *
-  * The BM25 fast path (WAND, Aggregator top-k) stays specialized in
-  * [[Searcher]]; [[Searcher.searchWith]] is the generic path any
-  * Similarity can ride (term, phrase, and flat boolean queries), scoring
-  * exactly like the reference's CreateNormalizedWeight pipeline:
+  * Every similarity rides the one scorer tree in [[Searcher]] (term,
+  * phrase, boolean, …), the reference's CreateNormalizedWeight pipeline:
   *
-  *   1. weights are created from ALL query clauses jointly (TF-IDF's
-  *      queryNorm couples them: 1/sqrt(Σ (idfSum·boost)²)); unindexed
-  *      terms still participate with df=0, like the reference's
-  *      TermWeight over empty TermStatistics;
+  *   1. weights are created once per query from ALL its term and phrase
+  *      leaves jointly (TF-IDF's queryNorm couples them:
+  *      1/sqrt(Σ (idfSum·boost)²)); unindexed terms still participate
+  *      with df=0, like the reference's TermWeight over empty
+  *      TermStatistics;
   *   2. each matching (doc, clause) scores independently — a clause is
-  *      one term (TermQ) or a term sequence (PhraseQ, scored on its
+  *      one term (TermQ) or a term sequence (a phrase, scored on its
   *      phrase freq);
-  *   3. clause scores sum in clause order, times coord(matched, total).
+  *   3. a boolean sums its clause scores in clause order, times
+  *      coord(matched, total).
   *
   * A clause weight is an opaque `Array[Float]` whose layout each
   * similarity defines for itself (a single normalized value for
   * BM25/TF-IDF; boost + per-term parameters for the SimilarityBase
   * families, whose phrase scoring is the reference's MultiSimScorer sum
   * of per-term scores at the shared phrase freq).
+  *
+  * Block-max WAND (public literature: Ding & Suel; the reference predates
+  * it) prunes only under a similarity that bounds a posting block's
+  * scores ([[blockBound]]); every other similarity scores every block.
   */
 trait SimilarityLike extends Serializable {
   /** One weight vector per clause, aligned index-for-index with
@@ -40,6 +44,20 @@ trait SimilarityLike extends Serializable {
     * (reference: Similarity.cs:122-143 vs TFIDFSimilarity.Coord). */
   def coord(matched: Int, total: Int): Float
 
+  /** Upper bound of [[score]] over a posting block whose largest tf is
+    * `maxTf` and whose shortest doc has norm byte `maxNormByte`. +∞ (the
+    * default) means no bound: nothing is pruned. */
+  def blockBound(maxTf: Int, maxNormByte: Byte, w: Array[Float]): Float =
+    Float.PositiveInfinity
+
+  /** True when a clause's weight ignores every other clause and coord is
+    * 1, so weights over the flat list of a tree's leaves score any nesting
+    * exactly. Otherwise (the default) [[Searcher]] accepts only a term, a
+    * phrase, or a flat MUST/SHOULD boolean of them with minShouldMatch
+    * ≤ 1 — the shapes whose leaves ARE the clause list the coupling is
+    * defined over. */
+  def clauseIndependent: Boolean = false
+
   protected final def dfOf(stats: Map[String, TermDictRow], t: String): Long =
     stats.get(t).map(_.df).getOrElse(0L)
   protected final def ttfOf(stats: Map[String, TermDictRow], t: String): Long =
@@ -47,9 +65,9 @@ trait SimilarityLike extends Serializable {
 }
 
 /** BM25 (k1=1.2, b=0.75): queryNorm = coord = 1; a phrase clause's
-  * weight is weightValue(Σ idf) (BM25Similarity.cs:210-225), and the
-  * score is linear in the weight so the sum matches the specialized
-  * phrase path bit-for-bit. Layout: w = [weightValue]. */
+  * weight is weightValue(Σ idf) (BM25Similarity.cs:210-225). The only
+  * similarity with a block bound ([[BM25.blockMaxScore]]), so the only one
+  * block-max WAND prunes under. Layout: w = [weightValue]. */
 final class BM25Similarity(avgdl: Float) extends SimilarityLike {
   private val cache = BM25.normCache(avgdl)
   def clauseWeights(clauses: Seq[(Seq[String], Float)],
@@ -61,6 +79,9 @@ final class BM25Similarity(avgdl: Float) extends SimilarityLike {
   def score(tf: Float, normByte: Byte, w: Array[Float]): Float =
     BM25.score(tf, normByte, w(0), cache)
   def coord(matched: Int, total: Int): Float = 1f
+  override def blockBound(maxTf: Int, maxNormByte: Byte, w: Array[Float]): Float =
+    BM25.blockMaxScore(maxTf, cache(maxNormByte & 0xff), w(0))
+  override def clauseIndependent: Boolean = true
 }
 
 /** Classic TF-IDF (DefaultSimilarity): shared queryNorm across clauses,

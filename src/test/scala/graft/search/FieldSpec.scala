@@ -79,13 +79,13 @@ class FieldSpec extends AnyFunSuite {
   test("keyword terms score under non-BM25 similarities too (omit-norms decode)") {
     // the sentinel norm byte must decode to factor 1 (TF-IDF) / docLen 1
     // (SimilarityBase family), not 0 or infinity
-    val tfidf = searcher.searchWith(new TfIdfSimilarity, TermQ("lang:scala"), N)
+    val tfidf = searcher.search(TermQ("lang:scala"), N, new TfIdfSimilarity)
     assert(tfidf.nonEmpty && tfidf.forall(h => h.score > 0f && !h.score.isNaN))
     val cs2 = new IndexReader(spark, dir).collectionStats
     val avgdl = graft.bm25.BM25.avgFieldLength(cs2.sumTotalTermFreq, cs2.maxDoc)
-    val lm = searcher.searchWith(new LMJelinekMercerSimilarity(), TermQ("lang:scala"), N)
+    val lm = searcher.search(TermQ("lang:scala"), N, new LMJelinekMercerSimilarity())
     assert(lm.nonEmpty && lm.forall(h => !h.score.isNaN && !h.score.isInfinite))
-    val dfr = searcher.searchWith(new DFRSimilarity(DFR.ModelIn, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl), TermQ("lang:scala"), N)
+    val dfr = searcher.search(TermQ("lang:scala"), N, new DFRSimilarity(DFR.ModelIn, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl))
     assert(dfr.nonEmpty && dfr.forall(h => h.score > 0f && h.score.isFinite))
   }
 

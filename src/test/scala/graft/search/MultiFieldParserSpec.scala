@@ -81,10 +81,19 @@ class MultiFieldParserSpec extends AnyFunSuite {
     val inexpressible = MatchAllQ()
     val q = BoolQ(Seq(TermQ("a"), inexpressible), Seq(TermQ("b")), Nil)
     assert(MultiFieldQueryParser.prefixField(q, "path").isEmpty)
-    // SHOULD/MUST_NOT drops still narrow-or-keep: fine to drop
+    // a SHOULD drop only narrows the branch: fine to drop
     val q2 = BoolQ(Seq(TermQ("a")), Seq(inexpressible, TermQ("b")), Nil)
     assert(MultiFieldQueryParser.prefixField(q2, "path")
       .contains(BoolQ(Seq(TermQ("path:a")), Seq(TermQ("path:b")), Nil)))
+  }
+
+  test("multi-field — inexpressible MUST_NOT clause fails the whole field branch") {
+    // dropping an exclusion would broaden the branch: None, like MUST
+    val q = BoolQ(Seq(TermQ("a")), Nil, Seq(MatchAllQ()))
+    assert(MultiFieldQueryParser.prefixField(q, "path").isEmpty)
+    val q2 = BoolQ(Seq(TermQ("a")), Nil, Seq(TermQ("b")))
+    assert(MultiFieldQueryParser.prefixField(q2, "path")
+      .contains(BoolQ(Seq(TermQ("path:a")), Nil, Seq(TermQ("path:b")))))
   }
 
   test("multi-field statics — parseEach and parseWithFlags") {

@@ -218,6 +218,46 @@ class CorpusSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
       oracle.map(h => (h.docId, h.score)).toSeq)
   }
 
+  test("BM25 blockBound bounds every decoded hit of its postings row") {
+    import spark.implicits._
+    val r = new IndexReader(spark, dir)
+    val sim = searcher.defaultSimilarity
+    val terms = Seq("def", "int", "one")
+    val stats = r.termStats(terms)
+    val cs = r.collectionStats
+    for (t <- terms) {
+      val w = sim.clauseWeights(Seq((Seq(t), 1f)), stats, cs.maxDoc, cs.sumTotalTermFreq).head
+      val rows = r.postings.where($"term" === t).as[graft.build.PostingRow].collect()
+      assert(rows.nonEmpty, t)
+      for (row <- rows) {
+        val bound = sim.blockBound(row.maxTf, row.maxNorm.toByte, w)
+        assert(!bound.isInfinite)
+        val (_, tfs, norms) = graft.postings.PostingsCodec.decodeBlock(
+          row.firstDocId, row.numDocs, row.bytes)
+        for (i <- tfs.indices)
+          assert(sim.score(tfs(i).toFloat, norms(i).toByte, w) <= bound,
+            s"$t row ${row.firstDocId}")
+      }
+    }
+  }
+
+  test("non-BM25 similarities: pruned top-10 == full sort of scored") {
+    val pruned = new Searcher(new IndexReader(spark, dir), pruneMinBlocks = 1)
+    val cs = pruned.reader.collectionStats
+    val avgdl = BM25.avgFieldLength(cs.sumTotalTermFreq, cs.maxDoc)
+    val sims = Seq(new TfIdfSimilarity,
+      new DFRSimilarity(DFR.ModelIn, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl))
+    val queries = Seq[Query](TermQ("def"),
+      BoolQ(should = Seq(TermQ("def"), TermQ("int"), TermQ("one"))))
+    for (sim <- sims; q <- queries) {
+      val top = pruned.search(q, 10, sim)
+      val full = pruned.scored(q, sim).collect().sortBy(h => (-h.score, h.docId)).take(10)
+      assert(top.nonEmpty)
+      assert(top.map(h => (h.docId, h.score)).toSeq == full.map(h => (h.docId, h.score)).toSeq,
+        s"$sim $q")
+    }
+  }
+
   test("multi-term queries: prefix/wildcard/fuzzy/range expand via dictionary") {
     // terms f0..f39 exist (function names)
     val prefixHits = searcher.search(PrefixQ("f1"), 200)

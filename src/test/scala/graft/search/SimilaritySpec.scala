@@ -6,10 +6,11 @@ import graft.build.IndexBuilder
 import graft.corpus.CorpusGen
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pluggable Similarity on the generic path: BM25 via searchWith equals
-  * the specialized WAND path bit-for-bit; TF-IDF reproduces the
-  * reference's DefaultSimilarity semantics (queryNorm coupling across
-  * clauses, coord = matched/total) on the TestTermScorer fixture. */
+/** Pluggable Similarity on the one scorer tree: an explicit
+  * BM25Similarity equals the default search bit-for-bit; TF-IDF
+  * reproduces the reference's DefaultSimilarity semantics (queryNorm
+  * coupling across clauses, coord = matched/total) on the TestTermScorer
+  * fixture. */
 class SimilaritySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -22,25 +23,25 @@ class SimilaritySpec extends AnyFunSuite {
       BM25.avgFieldLength(r.collectionStats.sumTotalTermFreq, r.collectionStats.maxDoc))
   }
 
-  test("searchWith(BM25Similarity) == the specialized search path, exactly") {
+  test("BM25Similarity passed explicitly == the default similarity, exactly") {
     val sim = new BM25Similarity(avgdl)
     for (q <- Seq[Query](TermQ("all"), TermQ("dogs"),
       BoolQ(should = Seq(TermQ("all"), TermQ("dogs"))),
       BoolQ(must = Seq(TermQ("dogs"))))) {
-      assert(searcher.searchWith(sim, q, 10).toSeq === searcher.search(q, 10).toSeq,
+      assert(searcher.search(q, 10, sim).toSeq === searcher.search(q, 10).toSeq,
         s"mismatch for $q")
     }
   }
 
-  test("searchWith(TfIdfSimilarity): single term reproduces the 1.6931472f golden") {
-    val hits = searcher.searchWith(new TfIdfSimilarity, TermQ("all"), 10)
+  test("TfIdfSimilarity: single term reproduces the 1.6931472f golden") {
+    val hits = searcher.search(TermQ("all"), 10, new TfIdfSimilarity)
     assert(hits.map(_.docId).toSeq === Seq(0L, 5L))
     assert(hits(0).score === 1.6931472f)
     assert(hits(0).score === hits(1).score)
   }
 
   test("LM-Dirichlet: ranks by query likelihood, matches the closed form") {
-    val hits = searcher.searchWith(new LMDirichletSimilarity(), TermQ("dogs"), 10)
+    val hits = searcher.search(TermQ("dogs"), 10, new LMDirichletSimilarity())
     assert(hits.map(_.docId).toSeq === Seq(1L))
     // closed form: p(dogs|C) = (ttf+1)/(sumTtf+1) = 3/8 (the reference's
     // add-one-smoothed DefaultCollectionModel, LMSimilarity.cs:174-177),
@@ -50,12 +51,12 @@ class SimilaritySpec extends AnyFunSuite {
     val expected = (math.log(1 + 2f / p) + math.log(2000f / (dl + 2000f))).toFloat
     assert(hits(0).score === expected)
     // a corpus-dominant term scores near zero (log(1+tf/(mu p)) small)
-    val common = searcher.searchWith(new LMDirichletSimilarity(), TermQ("all"), 10)
+    val common = searcher.search(TermQ("all"), 10, new LMDirichletSimilarity())
     assert(common.forall(_.score >= 0f))
   }
 
   test("LM-Jelinek-Mercer: closed form (lambda=0.1)") {
-    val hits = searcher.searchWith(new LMJelinekMercerSimilarity(0.1f), TermQ("dogs"), 10)
+    val hits = searcher.search(TermQ("dogs"), 10, new LMJelinekMercerSimilarity(0.1f))
     assert(hits.map(_.docId).toSeq === Seq(1L))
     val p = (2L + 1f) / (7L + 1f)
     val dl = BM25.NormTable(BM25.encodeNorm(2) & 0xff)
@@ -64,7 +65,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IB LL/D(f)/H2: closed form (c=1)") {
-    val hits = searcher.searchWith(new IBLLSimilarity(avgdl), TermQ("dogs"), 10)
+    val hits = searcher.search(TermQ("dogs"), 10, new IBLLSimilarity(avgdl))
     assert(hits.map(_.docId).toSeq === Seq(1L))
     def log2(x: Double) = math.log(x) / math.log(2)
     val dl = BM25.NormTable(BM25.encodeNorm(2) & 0xff)
@@ -74,7 +75,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("DFR I(n)L2: closed form (c=1)") {
-    val hits = searcher.searchWith(new DFRSimilarity(DFR.ModelIn, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl), TermQ("dogs"), 10)
+    val hits = searcher.search(TermQ("dogs"), 10, new DFRSimilarity(DFR.ModelIn, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl))
     assert(hits.map(_.docId).toSeq === Seq(1L))
     def log2(x: Double) = math.log(x) / math.log(2)
     val dl = BM25.NormTable(BM25.encodeNorm(2) & 0xff)
@@ -83,33 +84,51 @@ class SimilaritySpec extends AnyFunSuite {
     assert(hits(0).score === tfn * in * (1f / (tfn + 1f)))
   }
 
-  test("searchWith(BM25) phrase clause == the specialized phrase path, exactly") {
+  test("BM25Similarity phrase clause == the default phrase path, exactly") {
     val sim = new BM25Similarity(avgdl)
     val q = PhraseQ(Seq("dogs", "dogs"))
-    assert(searcher.searchWith(sim, q, 10).toSeq === searcher.search(q, 10).toSeq)
+    assert(searcher.search(q, 10, sim).toSeq === searcher.search(q, 10).toSeq)
     // phrase inside a boolean, mixed with a term clause
     val bq = BoolQ(should = Seq(TermQ("all"), PhraseQ(Seq("dogs", "dogs"))))
-    assert(searcher.searchWith(sim, bq, 10).toSeq === searcher.search(bq, 10).toSeq)
-    // sim-parametric search() dispatches BM25 to the WAND path
     assert(searcher.search(bq, 10, sim).toSeq === searcher.search(bq, 10).toSeq)
-    assert(searcher.search(TermQ("dogs"), 10, new TfIdfSimilarity).toSeq ===
-      searcher.searchWith(new TfIdfSimilarity, TermQ("dogs"), 10).toSeq)
+    // top-k under another similarity == the full sort of its scored set
+    val tfidf = new TfIdfSimilarity
+    assert(searcher.search(bq, 10, tfidf).toSeq ===
+      searcher.scored(bq, tfidf).collect().sortBy(h => (-h.score, h.docId)).take(10).toSeq)
+  }
+
+  test("MUST + SHOULD with minShouldMatch = 1 needs both clauses (TF-IDF)") {
+    // no doc holds both 'all' and 'dogs': the reference matches nothing
+    val q = BoolQ(must = Seq(TermQ("all")), should = Seq(TermQ("dogs")),
+      minShouldMatch = 1)
+    assert(searcher.search(q, 10, new TfIdfSimilarity).isEmpty)
+    assert(searcher.search(q, 10).isEmpty)
+  }
+
+  test("a coupled similarity still rejects shapes beyond a flat boolean") {
+    val tfidf = new TfIdfSimilarity
+    for (q <- Seq[Query](
+      BoolQ(should = Seq(TermQ("all"), BoolQ(must = Seq(TermQ("dogs"), TermQ("all"))))),
+      BoolQ(should = Seq(TermQ("all")), mustNot = Seq(TermQ("dogs"))),
+      DisMaxQ(Seq(TermQ("all"), TermQ("dogs"))),
+      MatchAllQ()))
+      withClue(q)(intercept[UnsupportedOperationException](searcher.search(q, 10, tfidf)))
   }
 
   test("duplicate clauses score independently (per-BooleanClause weights)") {
     // 'all all' (default-OR parse of a repeated term): both clauses score
-    val twice = searcher.searchWith(new BM25Similarity(avgdl),
-      BoolQ(should = Seq(TermQ("all"), TermQ("all"))), 10)
-    val once = searcher.searchWith(new BM25Similarity(avgdl), TermQ("all"), 10)
+    val twice = searcher.search(
+      BoolQ(should = Seq(TermQ("all"), TermQ("all"))), 10, new BM25Similarity(avgdl))
+    val once = searcher.search(TermQ("all"), 10, new BM25Similarity(avgdl))
     assert(twice.map(_.docId).toSeq === once.map(_.docId).toSeq)
     twice.zip(once).foreach { case (t, o) => assert(t.score === o.score * 2) }
     // '+all +all': the duplicated MUST must not drop matching docs
-    val mustDup = searcher.searchWith(new BM25Similarity(avgdl),
-      BoolQ(must = Seq(TermQ("all"), TermQ("all"))), 10)
+    val mustDup = searcher.search(
+      BoolQ(must = Seq(TermQ("all"), TermQ("all"))), 10, new BM25Similarity(avgdl))
     assert(mustDup.map(_.docId).toSeq === once.map(_.docId).toSeq)
     // TF-IDF: 'all all' has ssw = 2·(idfA)² and coord 2/2; check closed form
-    val dup = searcher.searchWith(new TfIdfSimilarity,
-      BoolQ(should = Seq(TermQ("all"), TermQ("all"))), 10)
+    val dup = searcher.search(
+      BoolQ(should = Seq(TermQ("all"), TermQ("all"))), 10, new TfIdfSimilarity)
     val idfA = TfIdf.idf(2, 6)
     val qn = TfIdf.queryNorm(2 * idfA * idfA)
     val wA = idfA * qn * idfA
@@ -124,8 +143,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("unindexed term still contributes idf(0) to TF-IDF queryNorm") {
     // reference: TermWeight via TermStatistics(docFreq=0) joins ssw
-    val hits = searcher.searchWith(new TfIdfSimilarity,
-      BoolQ(should = Seq(TermQ("all"), TermQ("zzz_not_indexed"))), 10)
+    val hits = searcher.search(
+      BoolQ(should = Seq(TermQ("all"), TermQ("zzz_not_indexed"))), 10, new TfIdfSimilarity)
     val idfA = TfIdf.idf(2, 6)
     val idfMissing = TfIdf.idf(0, 6)
     val qn = TfIdf.queryNorm(idfA * idfA + idfMissing * idfMissing)
@@ -135,8 +154,8 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("TF-IDF boolean: queryNorm couples clauses, coord penalizes partial matches") {
-    val hits = searcher.searchWith(new TfIdfSimilarity,
-      BoolQ(should = Seq(TermQ("all"), TermQ("dogs"))), 10)
+    val hits = searcher.search(
+      BoolQ(should = Seq(TermQ("all"), TermQ("dogs"))), 10, new TfIdfSimilarity)
     // expected by hand: idf over df(all)=2, df(dogs)=1, maxDoc=6
     val idfA = TfIdf.idf(2, 6)
     val idfD = TfIdf.idf(1, 6)
@@ -155,7 +174,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IB SPL/D(f)/H2: closed form (c=1)") {
-    val hits = searcher.searchWith(new IBSPLSimilarity(avgdl), TermQ("dogs"), 10)
+    val hits = searcher.search(TermQ("dogs"), 10, new IBSPLSimilarity(avgdl))
     assert(hits.map(_.docId).toSeq === Seq(1L))
     def log2(x: Double) = math.log(x) / math.log(2)
     val dl = BM25.NormTable(BM25.encodeNorm(2) & 0xff)
@@ -182,7 +201,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("DFR I(F)L2: closed form (c=1, F = totalTermFreq)") {
-    val hits = searcher.searchWith(new DFRSimilarity(DFR.ModelIF, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl), TermQ("dogs"), 10)
+    val hits = searcher.search(TermQ("dogs"), 10, new DFRSimilarity(DFR.ModelIF, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl))
     assert(hits.map(_.docId).toSeq === Seq(1L))
     def log2(x: Double) = math.log(x) / math.log(2)
     val dl = BM25.NormTable(BM25.encodeNorm(2) & 0xff)
@@ -200,8 +219,8 @@ class SimilaritySpec extends AnyFunSuite {
     // plain BM25, bit-for-bit
     for (q <- Seq[Query](TermQ("all"),
       BoolQ(should = Seq(TermQ("all"), TermQ("dogs"))))) {
-      assert(searcher.searchWith(perField, q, 10).toSeq ===
-        searcher.searchWith(bm25, q, 10).toSeq, s"default routing for $q")
+      assert(searcher.search(q, 10, perField).toSeq ===
+        searcher.search(q, 10, bm25).toSeq, s"default routing for $q")
     }
     // a clause with the mapped field prefix scores under ITS similarity:
     // weights computed per clause; verify via the weight vectors directly
@@ -221,9 +240,8 @@ class SimilaritySpec extends AnyFunSuite {
     def log2(x: Double) = math.log(x) / math.log(2)
     val dl = BM25.NormTable(BM25.encodeNorm(2) & 0xff)
     // G model (BasicModelG.cs): λ = F/(N+F) with F = ttf+1 kept double
-    val g = searcher.searchWith(
-      new DFRSimilarity(DFR.ModelG, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl),
-      TermQ("dogs"), 10)
+    val g = searcher.search(TermQ("dogs"), 10,
+      new DFRSimilarity(DFR.ModelG, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl))
     assert(g.map(_.docId).toSeq === Seq(1L))
     val tfn2 = (2f * log2(1 + avgdl / dl)).toFloat
     val lam = (2L + 1.0) / (6L + (2L + 1.0))
@@ -231,9 +249,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(g(0).score === modelG * (1f / (tfn2 + 1f)))
     // H1 normalization (NormalizationH1.cs:58): tfn = tf·avgdl/dl —
     // the reference ignores c entirely, and the op order matters
-    val h1 = searcher.searchWith(
-      new DFRSimilarity(DFR.ModelIn, DFR.AfterEffectL, DFR.NormalizationH1(), avgdl),
-      TermQ("dogs"), 10)
+    val h1 = searcher.search(TermQ("dogs"), 10,
+      new DFRSimilarity(DFR.ModelIn, DFR.AfterEffectL, DFR.NormalizationH1(), avgdl))
     val tfnH1 = 2f * avgdl / dl
     val in = tfnH1 * log2((6L + 1) / (1L + 0.5)).toFloat
     assert(h1(0).score === in * (1f / (tfnH1 + 1f)))
@@ -249,7 +266,7 @@ class SimilaritySpec extends AnyFunSuite {
     val aeL = 1f / (tfn + 1f)
     def run(m: DFR.BasicModel, ae: DFR.AfterEffect = DFR.AfterEffectL,
         n: DFR.Normalization = DFR.NormalizationH2()): Float =
-      searcher.searchWith(new DFRSimilarity(m, ae, n, avgdl), TermQ("dogs"), 10)(0).score
+      searcher.search(TermQ("dogs"), 10, new DFRSimilarity(m, ae, n, avgdl))(0).score
     // P (Poisson): λ = (F+1)/(N+1) float
     val lambdaP = (2.0 + 1).toFloat / (6.0 + 1).toFloat
     val modelP = (tfn * log2(tfn / lambdaP) +
@@ -298,24 +315,22 @@ class SimilaritySpec extends AnyFunSuite {
     val dl = BM25.NormTable(BM25.encodeNorm(2) & 0xff)
     val tfn = (2f * log2(1 + avgdl / dl)).toFloat
     // LambdaTTF: λ = (ttf+1)/(N+1) = 3/7 for 'dogs'
-    val ll = searcher.searchWith(new IBLLSimilarity(avgdl, useTtfLambda = true),
-      TermQ("dogs"), 10)
+    val ll = searcher.search(TermQ("dogs"), 10, new IBLLSimilarity(avgdl, useTtfLambda = true))
     val lamT = (2L + 1f) / (6L + 1f)
     assert(ll(0).score === (-math.log(lamT / (tfn + lamT))).toFloat)
     // MultiSimilarity: per-hit score = SUM over sub-scorers
     val bm25 = new BM25Similarity(avgdl)
     val dfr = new DFRSimilarity(DFR.ModelIn, DFR.AfterEffectL, DFR.NormalizationH2(), avgdl)
-    val multi = searcher.searchWith(new MultiSimilarity(Seq(bm25, dfr)),
-      TermQ("dogs"), 10)
-    val sBm = searcher.searchWith(bm25, TermQ("dogs"), 10)(0).score
-    val sDfr = searcher.searchWith(dfr, TermQ("dogs"), 10)(0).score
+    val multi = searcher.search(TermQ("dogs"), 10, new MultiSimilarity(Seq(bm25, dfr)))
+    val sBm = searcher.search(TermQ("dogs"), 10, bm25)(0).score
+    val sDfr = searcher.search(TermQ("dogs"), 10, dfr)(0).score
     assert(multi(0).score === sBm + sDfr)
   }
 
   test("SweetSpot: plateau length norm + baseline/hyperbolic tf closed forms") {
     // defaults (lnMin=lnMax=1, tfBase=tfMin=0) degenerate to
     // DefaultSimilarity exactly — same golden as TfIdfSimilarity
-    val degenerate = searcher.searchWith(new SweetSpotSimilarity(), TermQ("all"), 10)
+    val degenerate = searcher.search(TermQ("all"), 10, new SweetSpotSimilarity())
     assert(degenerate(0).score === 1.6931472f)
 
     val sim = new SweetSpotSimilarity(lnMin = 2, lnMax = 4, lnSteep = 0.5f,
@@ -337,7 +352,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(math.abs(hyper.hyperbolicTf(100f) - 2f) < 1e-4f)
     // end-to-end on the fixture: doc0 ("all", tf=1, dl=1) — tf floor
     // applies (1 <= tfMin) and dl=1 sits BELOW the [2,4] plateau
-    val hits = searcher.searchWith(sim, TermQ("all"), 10)
+    val hits = searcher.search(TermQ("all"), 10, sim)
     val idf = TfIdf.idf(2, 6)
     assert(hits(0).score === 1.5f * idf * sim.computeLengthNorm(1))
   }

@@ -9,9 +9,20 @@ import pandas as pd
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft-verify"
 
+
+def half_mem_mib():
+    """Half of this host's MemTotal in MiB (floor 1 GiB)."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return max(1024, int(line.split()[1]) // 2048)
+    return 1024
+
+
 con = duckdb.connect()
-# big-sf runs: cap memory and let DuckDB spill instead of getting OOM-killed
-con.execute("SET memory_limit='20GB'")
+# big-sf runs: cap memory at half the host and let DuckDB spill instead of
+# getting OOM-killed
+con.execute(f"SET memory_limit='{half_mem_mib()}MiB'")
 os.makedirs('/tmp/duck_spill', exist_ok=True)
 con.execute("SET temp_directory='/tmp/duck_spill'")
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
